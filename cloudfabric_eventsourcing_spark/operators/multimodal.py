@@ -565,6 +565,9 @@ def image_dhash(
                 out["media_id"].append(row["media_id"])
                 out["dhash"].append(dh)
             if out["media_id"]:
+                # nullable Int64: a plain column mixing ints and None is
+                # float64, which rounds every 64-bit hash in the batch
+                out["dhash"] = pd.array(out["dhash"], dtype="Int64")
                 yield pd.DataFrame(out)
 
     return df.where(F.col("kind") == "image").mapInPandas(

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import dataclasses
 import datetime
+import weakref
 from typing import Callable, Optional
 
 from cloudfabric_eventsourcing_spark.eventstore.event import Event
@@ -33,6 +34,11 @@ class AggregateUpdatedEvent(Event):
     carries the source event's timestamp as updated_at."""
 
     updated_at: Optional[datetime.datetime] = None
+
+
+_HANDLED_EVENT_TYPES: "weakref.WeakKeyDictionary[type, frozenset[str]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 class ProjectionBuilder:
@@ -58,12 +64,17 @@ class ProjectionBuilder:
 
     # -- dispatch -----------------------------------------------------------
     @property
-    def handled_event_types(self) -> set[str]:
-        return {
-            name[3:]
-            for name in dir(type(self))
-            if name.startswith("on_") and callable(getattr(self, name))
-        }
+    def handled_event_types(self) -> frozenset[str]:
+        cls = type(self)
+        types = _HANDLED_EVENT_TYPES.get(cls)
+        if types is None:
+            # discovered once per class: the engine asks on every event
+            types = _HANDLED_EVENT_TYPES[cls] = frozenset(
+                name[3:]
+                for name in dir(cls)
+                if name.startswith("on_") and callable(getattr(cls, name))
+            )
+        return types
 
     def apply_event(self, event: Event) -> None:
         handler = getattr(self, f"on_{type(event).__name__}", None)

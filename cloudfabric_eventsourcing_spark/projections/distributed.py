@@ -1,4 +1,4 @@
-"""Distributed projection rebuild — the T8 scale path.
+"""Distributed projection fold: the rebuild and live-MERGE scale path.
 
 Behavioral spec (reference, read-only): the rebuild worker replays the
 whole event log through the builders serially with a timestamp cursor
@@ -7,13 +7,22 @@ That single cursor is the reference's scale ceiling; SURVEY.md §3.3 notes
 a rebuild is embarrassingly parallel per stream: every projection document
 is a fold of ONE stream's events, so streams can be replayed concurrently.
 
-Spark mapping: groupBy(stream_id, partition_key) + applyInPandas. Each
-group replays through a FRESH builder instance bound to a group-local
-in-memory repository — the exact same handler code the serial path runs —
-and emits the group's final documents as rows. One shuffle on stream_id
-(uniform key), no driver funnel; the result DataFrame feeds the
-repository's snapshot writer (`overwrite_from_df`) so a 100 TB projection
-is written by executors in parallel.
+Spark mapping: one `mapInArrow` kernel over
+`repartition(<spark.sql.shuffle.partitions>, stream_id, partition_key)
+.sortWithinPartitions(stream_id, partition_key, stream_version)`.  The
+partition count is fixed by number so AQE's byte-based coalescing cannot
+shrink the parallelism of a fold whose cost is Python CPU, not bytes.
+The kernel walks each partition's rows in order, carrying a stream that
+straddles two Arrow batches over to the next batch, and replays every
+stream through a FRESH builder bound to a stream-local in-memory
+repository — the exact handler code the serial path runs.  It yields one
+typed Arrow batch of final documents per partition; the result feeds the
+repository's snapshot writer (`overwrite_from_df`) or its MERGE
+(`merge_from_df`), so documents never funnel through the driver.
+
+Both `ProjectionsRebuildProcessor` (whole log) and
+`SparkStreamingProjectionsObserver` (the streams a micro-batch touched)
+run this one fold.
 
 Applicability: sound whenever each document depends only on its own
 stream's events (true of every reference builder — the builder helpers key
@@ -23,11 +32,12 @@ the serial parity mode (`mode="serial"`).
 
 from __future__ import annotations
 
-from typing import Callable, Type
+from typing import Callable, Iterator, Type
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from cloudfabric_eventsourcing_spark.eventstore.event import RECORD_FIELDS
 from cloudfabric_eventsourcing_spark.projections.repository import (
     InMemoryProjectionRepository,
     arrow_schema,
@@ -36,6 +46,10 @@ from cloudfabric_eventsourcing_spark.schema import ProjectionSchema
 
 
 TOMBSTONE_COL = "__is_tombstone"
+
+# the event-row columns one stream's replay reads: the persisted row shape
+# minus the envelope schema version, which hydration ignores
+_EVENT_FIELDS = tuple(f for f in RECORD_FIELDS if f != "eventstore_schema_version")
 
 
 def fold_builder_documents(
@@ -66,10 +80,11 @@ def fold_builder_documents(
         )
         pa_schema = pa_schema.append(pa.field(TOMBSTONE_COL, pa.bool_()))
     key_name = schema.key_name
+    n_partitions = int(
+        events_df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
 
-    def fold(pdf):
-        import pandas as pd
-
+    def fold_partition(batches: Iterator[pa.RecordBatch]):
         from cloudfabric_eventsourcing_spark.eventstore import (
             InMemoryMetadataRepository,
         )
@@ -84,60 +99,66 @@ def fold_builder_documents(
             ProjectionIndexStateStore,
         )
 
-        pdf = pdf.sort_values("stream_version")
-        events = []
-        for rec in pdf.itertuples(index=False):
-            record = EventRecord(
-                id=rec.id,
-                partition_key=rec.partition_key,
-                created_at=rec.created_at.to_pydatetime()
-                if hasattr(rec.created_at, "to_pydatetime")
-                else rec.created_at,
-                stream_id=rec.stream_id,
-                stream_version=int(rec.stream_version),
-                event_type=rec.event_type,
-                event_data=rec.event_data,
-                user_info=rec.user_info,
+        key_prop = schema.property(key_name)
+        out: list[dict] = []
+
+        def fold_stream(records: list) -> None:
+            local_state = ProjectionIndexStateStore(InMemoryMetadataRepository())
+            local_repo = _TrackingInMemoryRepository(schema, local_state)
+            engine = ProjectionsEngine()
+            engine.add_projection_builder(builder_factory(local_repo))
+            for record in records:
+                engine.handle_event(record.to_event())
+
+            docs = [
+                _normalize_doc(d)
+                for index in local_repo._indexes.values()
+                for d in index.values()
+            ]
+            if with_tombstones:
+                for d in docs:
+                    d[TOMBSTONE_COL] = False
+                present = {
+                    (str(d.get(key_name)), d.get("PartitionKey")) for d in docs
+                }
+                for kid, kpk in local_repo.deleted_keys:
+                    if (str(kid), kpk) not in present:
+                        docs.append(
+                            {
+                                key_name: _coerce_key(kid, key_prop),
+                                "PartitionKey": kpk,
+                                TOMBSTONE_COL: True,
+                            }
+                        )
+            out.extend(docs)
+
+        stream_key, records = None, []
+        for batch in batches:
+            rows = batch.select(_EVENT_FIELDS)
+            # naive-UTC created_at, the store's convention: Spark hands
+            # timestamps over tz-aware, and the cast keeps the UTC instant
+            at = rows.schema.get_field_index("created_at")
+            rows = rows.set_column(
+                at, "created_at", rows.column(at).cast(pa.timestamp("us"))
             )
-            events.append(record.to_event())
+            for row in rows.to_pylist():
+                key = (row["stream_id"], row["partition_key"])
+                if key != stream_key:
+                    if records:
+                        fold_stream(records)
+                    stream_key, records = key, []
+                # a stream that straddles two batches keeps accumulating
+                # here: only a new key, or the partition's end, folds it
+                records.append(EventRecord(**row))
+        if records:
+            fold_stream(records)
+        if out:
+            yield pa.RecordBatch.from_pylist(out, schema=pa_schema)
 
-        local_state = ProjectionIndexStateStore(InMemoryMetadataRepository())
-        local_repo = _TrackingInMemoryRepository(schema, local_state)
-        engine = ProjectionsEngine()
-        engine.add_projection_builder(builder_factory(local_repo))
-        for event in events:
-            engine.handle_event(event)
-
-        docs = [
-            _normalize_doc(d)
-            for index in local_repo._indexes.values()
-            for d in index.values()
-        ]
-        if with_tombstones:
-            for d in docs:
-                d[TOMBSTONE_COL] = False
-            present = {
-                (str(d.get(key_name)), d.get("PartitionKey")) for d in docs
-            }
-            key_prop = schema.property(key_name)
-            for kid, kpk in local_repo.deleted_keys:
-                if (str(kid), kpk) not in present:
-                    docs.append(
-                        {
-                            key_name: _coerce_key(kid, key_prop),
-                            "PartitionKey": kpk,
-                            TOMBSTONE_COL: True,
-                        }
-                    )
-        if not docs:
-            return pd.DataFrame({f.name: [] for f in struct.fields})
-        # round-trip through arrow with the schema-derived types so
-        # decimals/timestamps/nested structs land exactly as the snapshot
-        # writer expects them
-        return pa.Table.from_pylist(docs, schema=pa_schema).to_pandas()
-
-    return events_df.groupBy("stream_id", "partition_key").applyInPandas(
-        fold, struct
+    return (
+        events_df.repartition(n_partitions, "stream_id", "partition_key")
+        .sortWithinPartitions("stream_id", "partition_key", "stream_version")
+        .mapInArrow(fold_partition, struct)
     )
 
 
@@ -167,10 +188,10 @@ def _coerce_key(kid, key_prop):
 
 
 class _TrackingInMemoryRepository(InMemoryProjectionRepository):
-    """Group-local repository that also records hard deletes so the live
+    """Stream-local repository that also records hard deletes so the live
     MERGE path can emit tombstones.
 
-    Index resolution is memoized: the group-local state machine never
+    Index resolution is memoized: the stream-local state machine never
     transitions after construction, and re-resolving (which re-hashes the
     schema) per document op dominated the per-event fold cost."""
 

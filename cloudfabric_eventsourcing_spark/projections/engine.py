@@ -20,7 +20,9 @@ under timestamp collisions (documented improvement).
 
 from __future__ import annotations
 
+import contextlib
 import datetime
+import threading
 from typing import Callable, Optional
 
 from cloudfabric_eventsourcing_spark.eventstore.event import Event
@@ -29,6 +31,7 @@ from cloudfabric_eventsourcing_spark.projections.builder import (
     AggregateUpdatedEvent,
     ProjectionBuilder,
 )
+from cloudfabric_eventsourcing_spark.projections import state as _state
 from cloudfabric_eventsourcing_spark.projections.state import ProjectionIndexStateStore
 
 ProgressCallback = Callable[[int, Event], None]
@@ -151,12 +154,16 @@ class ProjectionsRebuildProcessor:
     """Worker/ProjectionsRebuildProcessor.cs:28-114 on the state store.
 
     Two execution modes:
-      - **distributed** (default when a SparkSession is provided): each
-        builder's documents are recomputed with one per-stream
-        applyInPandas fold over the whole event table and written through
-        the repository's snapshot sink — the SURVEY §3.3 scale path.
-        Progress/health is updated per event batch (streams are split into
-        `rebuild_batches` hash buckets; each bucket is one Spark job).
+      - **distributed** (default when a SparkSession is provided): one
+        pass per builder over the whole event table. The pass observes
+        the event count and the latest `created_at` (a Spark
+        `Observation`, no extra job), folds every stream once through
+        `projections.distributed.fold_builder_documents`, and writes the
+        documents through the repository's snapshot sink — the SURVEY
+        §3.3 scale path. A heartbeat thread keeps the rebuild lease's
+        health check fresh while the pass runs, so no other worker can
+        judge the lease stale mid-run; progress (events processed, last
+        event timestamp) is recorded when each pass finishes.
       - **serial** (`mode="serial"`, or no SparkSession): the reference's
         chunked single-cursor replay loop, kept as the parity mode and for
         builders whose documents aggregate across streams.
@@ -170,7 +177,6 @@ class ProjectionsRebuildProcessor:
         chunk_size: int = 250,
         spark=None,
         mode: str = "auto",
-        rebuild_batches: int = 4,
     ):
         if mode not in ("auto", "distributed", "serial"):
             raise ValueError(f"unknown rebuild mode {mode!r}")
@@ -180,7 +186,6 @@ class ProjectionsRebuildProcessor:
         self.chunk_size = chunk_size
         self.spark = spark
         self.mode = mode
-        self.rebuild_batches = max(1, rebuild_batches)
 
     def rebuild_one_projection_which_requires_rebuild(self) -> Optional[str]:
         state, index_name = self.state_store.acquire_and_lock_rebuild()
@@ -193,13 +198,37 @@ class ProjectionsRebuildProcessor:
         if distributed:
             if self.spark is None:
                 raise ValueError("distributed rebuild mode needs a SparkSession")
-            processed = self._replay_distributed(engine, state, index_name)
+            with self._lease_heartbeat(state.projection_name, index_name):
+                processed = self._replay_distributed(engine, state, index_name)
         else:
             processed = self._replay_serial(engine, state, index_name)
         self.state_store.update_rebuild_progress(
             state.projection_name, index_name, processed, completed=True
         )
         return index_name
+
+    @contextlib.contextmanager
+    def _lease_heartbeat(self, projection_name: str, index_name: str):
+        """Refresh the lease's `rebuild_health_check_at` every third of the
+        staleness threshold while a distributed pass runs: the pass is one
+        Spark job with no progress callback, and a lease whose health check
+        goes stale can be acquired by another worker mid-run."""
+        stop = threading.Event()
+        interval = _state.REBUILD_HEALTH_CHECK_STALE.total_seconds() / 3
+
+        def beat():
+            while not stop.wait(interval):
+                self.state_store.update_rebuild_progress(
+                    projection_name, index_name, events_processed=None
+                )
+
+        beater = threading.Thread(target=beat, daemon=True)
+        beater.start()
+        try:
+            yield
+        finally:
+            stop.set()
+            beater.join()
 
     # -- serial parity mode (the reference's cursor loop) -------------------
     def _replay_serial(self, engine, state, index_name) -> int:
@@ -223,6 +252,7 @@ class ProjectionsRebuildProcessor:
 
     # -- distributed scale mode ---------------------------------------------
     def _replay_distributed(self, engine, state, index_name) -> int:
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
         from cloudfabric_eventsourcing_spark.projections.distributed import (
@@ -233,40 +263,23 @@ class ProjectionsRebuildProcessor:
 
         total = self.event_store.get_statistics().total_events_count
         events_df = self.event_store.to_df(self.spark)
-        n_batches = self.rebuild_batches
         processed = 0
-        per_builder_parts: list[list] = [[] for _ in engine._builders]
-        for b in range(n_batches):
-            part = (
-                events_df.where(
-                    F.pmod(F.abs(F.xxhash64("stream_id")), F.lit(n_batches)) == b
+        for builder in engine._builders:
+            progress = Observation()
+            # an empty log's plan is optimized away, its observation with
+            # it: there is nothing to count then
+            source = (
+                events_df.observe(
+                    progress,
+                    F.count(F.lit(1)).alias("n"),
+                    F.max("created_at").alias("ts"),
                 )
-                if n_batches > 1
+                if total
                 else events_df
             )
-            for i, builder in enumerate(engine._builders):
-                docs = fold_builder_documents(
-                    part,
-                    builder_rebuild_factory(builder),
-                    builder.repository.schema,
-                ).persist()
-                docs.count()  # materialize: progress reflects finished work
-                per_builder_parts[i].append(docs)
-            stats = part.agg(
-                F.count(F.lit(1)).alias("n"), F.max("created_at").alias("ts")
-            ).first()
-            processed += int(stats["n"])
-            self.state_store.update_rebuild_progress(
-                state.projection_name,
-                index_name,
-                processed,
-                last_ts=stats["ts"],
-                total=total,
+            docs = fold_builder_documents(
+                source, builder_rebuild_factory(builder), builder.repository.schema
             )
-        for builder, parts in zip(engine._builders, per_builder_parts):
-            docs = parts[0]
-            for extra in parts[1:]:
-                docs = docs.unionByName(extra)
             repo = builder.repository
             if hasattr(repo, "overwrite_from_df"):
                 # executors write the snapshot directly — no driver funnel
@@ -278,8 +291,15 @@ class ProjectionsRebuildProcessor:
                     resolved,
                     [r.asDict(recursive=True) for r in docs.collect()],
                 )
-            for p in parts:
-                p.unpersist()
+            stats = progress.get if total else {"n": 0, "ts": None}
+            processed = int(stats["n"])
+            self.state_store.update_rebuild_progress(
+                state.projection_name,
+                index_name,
+                processed,
+                last_ts=stats["ts"],
+                total=total,
+            )
         return processed
 
     def rebuild_projections_that_require_rebuild(

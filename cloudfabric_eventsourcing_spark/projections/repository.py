@@ -326,6 +326,8 @@ class ParquetProjectionRepository(ProjectionRepository):
         # re-enters via overwrite_from_df's swap section
         self._lock = threading.RLock()
         self._schemas: dict[str, ProjectionSchema] = {}
+        # index name -> ((path, inode, mtime_ns, size), inferred StructType)
+        self._snapshot_schemas: dict[str, tuple] = {}
         self._include_debug_information = include_debug_information
 
     # -- snapshot helpers ---------------------------------------------------
@@ -458,10 +460,22 @@ class ParquetProjectionRepository(ProjectionRepository):
         index_name, schema = self._resolve(selector)
         path = self._snapshot_path(index_name)
         if path is None:
-            from pyspark.sql.types import StructType
-
             return self.spark.createDataFrame([], schema.to_struct_type())
-        return self.spark.read.parquet(path)
+        return self._read_snapshot(index_name, path)
+
+    def _read_snapshot(self, index_name: str, path: str):
+        """`spark.read.parquet(path)` that infers the snapshot's schema once:
+        inference is a Spark job of its own, paid on every query and MERGE
+        otherwise. The memo is keyed by the path and its inode, mtime and
+        size, so a recreated snapshot reusing a name is inferred afresh."""
+        st = os.stat(path)
+        stamp = (path, st.st_ino, st.st_mtime_ns, st.st_size)
+        hit = self._snapshot_schemas.get(index_name)
+        if hit is not None and hit[0] == stamp:
+            return self.spark.read.schema(hit[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._snapshot_schemas[index_name] = (stamp, df.schema)
+        return df
 
     def create_or_replace_view(
         self, view_name: Optional[str] = None, selector: str = IndexSelector.ReadOnly
@@ -479,7 +493,7 @@ class ParquetProjectionRepository(ProjectionRepository):
         path = self._snapshot_path(index_name)
         if path is None:
             return ProjectionQueryResult(records=[], total_records_found=0)
-        df = self.spark.read.parquet(path)
+        df = self._read_snapshot(index_name, path)
         return spark_run_query(
             df, query, schema, partition_key,
             include_debug_information=self._include_debug_information,
@@ -572,24 +586,30 @@ class ParquetProjectionRepository(ProjectionRepository):
         # is re-entered by overwrite_from_df's swap section)
         with self._lock:
             current = self.to_df(selector=selector)
-            changed = (
-                docs_df.select(
-                    F.col(key).cast("string").alias("__mk"),
-                    F.col("PartitionKey").alias("__mp"),
+            # the plan reads docs_df twice (changed-key set, upsert branch);
+            # cached, a fold behind it runs once per MERGE, not twice
+            docs_df = docs_df.persist()
+            try:
+                changed = (
+                    docs_df.select(
+                        F.col(key).cast("string").alias("__mk"),
+                        F.col("PartitionKey").alias("__mp"),
+                    )
+                    .distinct()
                 )
-                .distinct()
-            )
-            kept = current.join(
-                F.broadcast(changed),
-                (current[key].cast("string") == changed["__mk"])
-                & (current["PartitionKey"] == changed["__mp"]),
-                "left_anti",
-            )
-            ups = docs_df
-            if tombstone_col is not None:
-                ups = ups.where(~F.col(tombstone_col)).drop(tombstone_col)
-            merged = kept.unionByName(ups.select(*current.columns))
-            self.overwrite_from_df(merged, selector=selector)
+                kept = current.join(
+                    F.broadcast(changed),
+                    (current[key].cast("string") == changed["__mk"])
+                    & (current["PartitionKey"] == changed["__mp"]),
+                    "left_anti",
+                )
+                ups = docs_df
+                if tombstone_col is not None:
+                    ups = ups.where(~F.col(tombstone_col)).drop(tombstone_col)
+                merged = kept.unionByName(ups.select(*current.columns))
+                self.overwrite_from_df(merged, selector=selector)
+            finally:
+                docs_df.unpersist()
 
     def overwrite_from_df(self, df, selector: str = IndexSelector.ProjectionRebuild):
         """Distributed rebuild sink: the Spark job writes the new snapshot

@@ -266,11 +266,14 @@ class ProjectionIndexStateStore:
         self,
         projection_name: str,
         index_name: str,
-        events_processed: int,
+        events_processed: Optional[int],
         last_ts: Optional[datetime.datetime] = None,
         total: Optional[int] = None,
         completed: bool = False,
     ) -> None:
+        """Record rebuild progress and refresh the lease's health check;
+        ``events_processed=None`` is a pure heartbeat that leaves the
+        count as it is."""
         with self._lock:
             cas = getattr(self._repo, "compare_and_upsert", None)
             # CAS-with-retry: a progress heartbeat must never clobber a
@@ -284,7 +287,8 @@ class ProjectionIndexStateStore:
                 state = ProjectionIndexState.from_dict(raw)
                 for s in state.indexes_statuses:
                     if s.index_name == index_name:
-                        s.rebuild_events_processed = events_processed
+                        if events_processed is not None:
+                            s.rebuild_events_processed = events_processed
                         s.rebuild_health_check_at = _utcnow()
                         if last_ts is not None:
                             s.last_processed_event_timestamp = last_ts

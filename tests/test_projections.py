@@ -324,9 +324,9 @@ def test_multi_projection_fanout(world):
 
 def test_rebuild_processor_distributed_path(world, spark):
     """T8 scale mode: the rebuild processor drives the per-stream
-    applyInPandas fold + snapshot write instead of the serial cursor loop,
-    with per-batch progress updates. Result must equal the serial
-    recompute (rebuild == recompute invariant)."""
+    mapInArrow fold + snapshot write instead of the serial cursor loop,
+    with observed progress. Result must equal the serial recompute
+    (rebuild == recompute invariant)."""
     store, state, repo, engine, agg_repo = world
     for i in range(4):
         place(
@@ -363,9 +363,7 @@ def test_rebuild_processor_distributed_path(world, spark):
         e.add_projection_builder(V2Builder(new_repo, IndexSelector.ProjectionRebuild))
         return e
 
-    proc = ProjectionsRebuildProcessor(
-        state, engine_factory, store, spark=spark, rebuild_batches=2
-    )
+    proc = ProjectionsRebuildProcessor(state, engine_factory, store, spark=spark)
     assert proc.mode == "auto" and proc.spark is not None  # distributed path
     rebuilt = proc.rebuild_projections_that_require_rebuild()
     assert new_schema.index_name() in rebuilt
@@ -378,6 +376,128 @@ def test_rebuild_processor_distributed_path(world, spark):
     completed = [s for s in st.indexes_statuses if s.rebuild_completed_at]
     assert completed and completed[0].rebuild_events_processed == 4
     assert completed[0].total_events_to_process == 4
+
+
+def test_distributed_rebuild_heartbeat_holds_the_lease(world, spark, monkeypatch):
+    """The distributed pass is one Spark job with no progress callback, so
+    a heartbeat thread must keep the lease's health check fresh: with the
+    staleness threshold (and so the heartbeat interval) shrunk and a
+    builder slower than the threshold, `rebuild_health_check_at` advances
+    during the pass and a concurrent acquirer never takes the lease.  The
+    observed progress must equal the store's count and latest event."""
+    import threading
+    import time
+
+    from cloudfabric_eventsourcing_spark.projections import state as state_mod
+
+    store, state, repo, engine, agg_repo = world
+    for i in range(3):
+        order = place(agg_repo, f"00000000-0000-0000-0000-00000000005{i}", f"H{i}")
+        for k in range(6 if i == 0 else 1):
+            loaded = agg_repo.load(order.id, ORDERS_PARTITION_KEY)
+            loaded.add_item(OrderItem(utcnow(), f"I{k}", decimal.Decimal("1.00")))
+            agg_repo.save(USER, loaded)
+
+    new_schema = orders_list_schema()
+    new_schema.properties.append(PropertySchema("Note", "String"))
+    new_repo = InMemoryProjectionRepository(new_schema, state)
+    new_index = new_schema.index_name()
+
+    class SlowBuilder(OrdersListProjectionBuilder):
+        def apply_event(self, event):
+            time.sleep(0.3)  # stream 0's 7 events outlast the threshold 3x
+            super().apply_event(event)
+
+    def engine_factory(index_name):
+        e = ProjectionsEngine(store)
+        e.add_projection_builder(SlowBuilder(new_repo, IndexSelector.ProjectionRebuild))
+        return e
+
+    monkeypatch.setattr(
+        state_mod, "REBUILD_HEALTH_CHECK_STALE", datetime.timedelta(seconds=0.6)
+    )
+    # the fixture's index was marked complete but never leased; settle it
+    # so the new index is the only pending rebuild
+    taken, fixture_index = state.acquire_and_lock_rebuild()
+    state.update_rebuild_progress(taken.projection_name, fixture_index, 0, completed=True)
+    new_repo.ensure_index()  # registers the new index as pending
+    proc = ProjectionsRebuildProcessor(state, engine_factory, store, spark=spark)
+
+    def status():
+        st = state.get(new_schema.schema_name)
+        return next(s for s in st.indexes_statuses if s.index_name == new_index)
+
+    health_checks, stolen = [], []
+    done = threading.Event()
+
+    def poll():
+        while not done.wait(0.05):
+            s = status()
+            if s.rebuild_started_at is not None and s.rebuild_completed_at is None:
+                health_checks.append(s.rebuild_health_check_at)
+                taken, _ = state.acquire_and_lock_rebuild()
+                if taken is not None:
+                    stolen.append(taken)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        assert proc.rebuild_projections_that_require_rebuild() == [new_index]
+    finally:
+        done.set()
+        poller.join()
+
+    assert not stolen, "a concurrent worker took the lease mid-run"
+    assert len(set(health_checks)) >= 3, health_checks
+    s = status()
+    stats = store.get_statistics()
+    assert s.rebuild_completed_at is not None
+    assert s.rebuild_events_processed == stats.total_events_count == 11
+    assert s.total_events_to_process == stats.total_events_count
+    assert s.last_processed_event_timestamp == stats.last_event_created_at
+
+
+def test_distributed_rebuild_of_an_empty_store(spark):
+    """An empty log rebuilds to an empty index with 0 events processed:
+    its plan is optimized away, so no progress can be observed from it."""
+    store = InMemoryEventStore()
+    state = ProjectionIndexStateStore(InMemoryMetadataRepository())
+    repo = InMemoryProjectionRepository(orders_list_schema(), state)
+    index_name = repo.ensure_index()
+
+    def engine_factory(_index_name):
+        e = ProjectionsEngine(store)
+        e.add_projection_builder(
+            OrdersListProjectionBuilder(repo, IndexSelector.ProjectionRebuild)
+        )
+        return e
+
+    proc = ProjectionsRebuildProcessor(state, engine_factory, store, spark=spark)
+    assert proc.rebuild_projections_that_require_rebuild() == [index_name]
+    s = state.get(orders_list_schema().schema_name).indexes_statuses[0]
+    assert s.rebuild_completed_at is not None
+    assert s.rebuild_events_processed == 0
+    assert repo.query(ProjectionQuery()).total_records_found == 0
+
+
+def test_handled_event_types_cached_per_class(world):
+    """Handled types are discovered once per class: instances share one
+    set, a subclass's extra handler is seen, and the parent's set stays
+    what its handlers declare."""
+    store, state, repo, engine, agg_repo = world
+    fixture_types = {"OrderPlaced", "OrderItemAdded", "OrderItemRemoved", "AggregateUpdated"}
+
+    class ShippingBuilder(OrdersListProjectionBuilder):
+        def on_OrderShipped(self, evt):
+            pass
+
+    a = OrdersListProjectionBuilder(repo)
+    b = OrdersListProjectionBuilder(repo, IndexSelector.ProjectionRebuild)
+    sub = ShippingBuilder(repo)
+    assert a.handled_event_types == fixture_types
+    assert a.handled_event_types is b.handled_event_types
+    assert sub.handled_event_types == fixture_types | {"OrderShipped"}
+    assert OrdersListProjectionBuilder(repo).handled_event_types == fixture_types
 
 
 def test_threaded_rebuild_waves_drain_pending_rebuilds(tmp_path):

@@ -3,6 +3,7 @@ distributed-fold rebuild path."""
 
 import decimal
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -173,6 +174,41 @@ def test_overwrite_from_df_rebuild_sink(spark, tmp_path, world):
     repo.overwrite_from_df(docs)
     res = repo.query(ProjectionQuery())
     assert res.total_records_found == 3
+
+
+def test_snapshot_schema_inferred_once_per_snapshot(spark, tmp_path, world):
+    """Reading a snapshot infers its schema with a Spark job; a second read
+    of the same snapshot must reuse it (0 jobs).  A snapshot recreated
+    under the same name is inferred afresh, never served a stale schema."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    store, state, repo, agg_repo = world
+    repo.upsert({"Id": "a-1", "Name": "first", "ItemsCount": 1}, ORDERS_PARTITION_KEY)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_of(group, read):
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            df = read()
+        finally:
+            spark.sparkContext.setJobGroup("", "")
+        return df, len(tracker.getJobIdsForGroup(group))
+
+    first, _ = jobs_of("snapshot-read-1", repo.to_df)
+    again, jobs = jobs_of("snapshot-read-2", repo.to_df)
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert again.collect() == first.collect()
+
+    path = repo._snapshot_path(repo.ensure_index(IndexSelector.ReadOnly))
+    table = pq.read_table(path)
+    os.unlink(path)
+    pq.write_table(table.append_column("Extra", pa.array(["x"])), path)
+    recreated, _ = jobs_of("snapshot-read-3", repo.to_df)
+    assert "Extra" in recreated.columns
+    assert recreated.collect()[0]["Extra"] == "x"
 
 
 def test_projection_sql_view(spark, tmp_path, world):
